@@ -12,8 +12,8 @@ picks the hot-conversation share, the malformed share and the body length,
 so ten seeds exercise ten input shapes.
 
 Catalog tables mimic the ``documents`` and ``events`` tables of TESTDATA.md
-(same schema and value ranges), in a seed-determined row order and file
-split, with planted exact and near duplicates so every dedup tier has work.
+at sf0.1 (same schema, row counts and value distributions), in a
+seed-determined row order and file split.
 """
 
 from __future__ import annotations
@@ -36,8 +36,16 @@ WORDS = np.array(
     "slow group agg filter query big key window vector table stream merge "
     "the join customer data row".split()
 )
+# Catalog table shapes follow TESTDATA.md's sf0.1 tables: documents of
+# 10-100 tokens (uniform) over the 30 words above, 5 % of them planted
+# near duplicates ending in "dup", languages about 40 % en and 15 % each
+# other, 20 sources; events uniform over 1,500 users, 30 days and five
+# types, values exponential with mean 50.
+DOC_TOKENS = (10, 100)
+DOC_DUP_SHARE = 0.05
 LANGS = np.array(["en", "zh", "de", "fr", "es"])
 LANG_P = [0.4, 0.15, 0.15, 0.15, 0.15]
+EVENT_VALUE_MEAN = 50.0
 EVENT_TYPES = np.array(["signup", "click", "error", "view", "purchase"])
 # 2020-11-13 11:28:05 UTC, the first line of the reference's test input
 BASE_TS_S = 1605266885
@@ -135,17 +143,13 @@ def write_transcripts(
 
 
 def _documents(rng: np.random.Generator, n_docs: int) -> pa.Table:
-    n_tok = rng.integers(8, 100, n_docs)
+    n_tok = rng.integers(DOC_TOKENS[0], DOC_TOKENS[1] + 1, n_docs)
     texts = [" ".join(rng.choice(WORDS, k)) for k in n_tok]
-    # exact duplicates (every 17th doc copied) and near duplicates (a copy
-    # with a few tokens replaced) feed the exact and MinHash/edit tiers
-    for i in range(0, n_docs - 1, 17):
-        texts[int(rng.integers(0, n_docs))] = texts[i]
-    for i in range(5, n_docs - 1, 23):
-        toks = texts[i].split()
-        for _ in range(int(rng.integers(1, 4))):
-            toks[int(rng.integers(0, len(toks)))] = str(rng.choice(WORDS))
-        texts[int(rng.integers(0, n_docs))] = " ".join(toks)
+    # planted near duplicates: another doc's text plus one marker token,
+    # so the MinHash/edit tiers have work; two plants of the same source
+    # are exact duplicates of each other
+    for i in np.flatnonzero(rng.random(n_docs) < DOC_DUP_SHARE).tolist():
+        texts[i] = texts[int(rng.integers(0, n_docs))] + " dup"
     return pa.table(
         {
             "doc_id": np.arange(n_docs, dtype=np.int64),
@@ -165,7 +169,7 @@ def _events(rng: np.random.Generator, n_events: int, n_users: int) -> pa.Table:
             "ts": pa.array(ts, pa.timestamp("us")),
             "user_id": rng.integers(0, n_users, n_events).astype(np.int64),
             "event_type": EVENT_TYPES[rng.integers(0, len(EVENT_TYPES), n_events)].tolist(),
-            "value": np.round(rng.random(n_events) * 200, 2),
+            "value": np.round(rng.exponential(EVENT_VALUE_MEAN, n_events), 2),
             "props": [f'{{"k": {k}}}' for k in rng.integers(0, 100, n_events).tolist()],
         }
     )

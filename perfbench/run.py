@@ -29,6 +29,7 @@ import sys
 import time
 import traceback
 import uuid
+from contextlib import nullcontext
 
 HERE = os.path.dirname(os.path.abspath(__file__))
 ROOT = os.path.dirname(HERE)
@@ -112,25 +113,25 @@ PER_LAYER = {
 }
 
 CONTROL_ROWS = 2_000_000
-# Untimed reps on the full input before the window (at least one), so JIT
-# and caches settle at the size the window measures: after 4 s of warm-in
-# the CPU time of successive batch_agg reps still fell by up to 40 %.
+# Untimed reps on the full input before the window, so JIT and caches
+# settle at the size the window measures: after 4 s of warm-in the CPU
+# time of successive batch_agg reps still fell by up to 40 %, and after
+# one 800k-turn rep the next was still 10-20 % faster.
 WARM_IN_S = 10.0
+WARM_IN_REPS = 2
 
 
 def nproc() -> int:
     return len(os.sched_getaffinity(0))
 
 
-def scaling_levels(spec: str | None, n: int) -> list[int]:
-    """Core levels for the scaling measurement: 1 and ``n`` by default.
-    A level above ``n`` would time-share cores and understate scaling,
-    so it is refused rather than run."""
-    levels = sorted({1, n} if spec is None else {int(x) for x in spec.split(",")})
-    bad = [lv for lv in levels if lv < 1 or lv > n]
-    if bad:
-        raise ValueError(f"refusing core levels {bad}: this host has nproc={n}")
-    return levels
+def check_cores(cores: int, n: int) -> int:
+    """Every session starts through this check. A level above ``n``
+    would time-share cores and understate scaling, so it is refused
+    rather than run."""
+    if not 1 <= cores <= n:
+        raise ValueError(f"refusing core level {cores}: this host has nproc={n}")
+    return cores
 
 
 def parse_args(argv=None) -> argparse.Namespace:
@@ -139,10 +140,6 @@ def parse_args(argv=None) -> argparse.Namespace:
     p.add_argument("--seed", type=int, required=True)
     p.add_argument("--seconds", type=float, required=True)
     p.add_argument("--trace", type=int, choices=(0, 1), default=0)
-    p.add_argument(
-        "--levels", default=None,
-        help="comma-separated core levels for the scaling phase (default: 1,nproc)",
-    )
     return p.parse_args(argv)
 
 
@@ -180,14 +177,14 @@ def _median(values) -> float:
 
 
 class Bench:
-    def __init__(self, args, levels: list[int], work: str):
+    def __init__(self, args, work: str):
         import oracle
         from tracing import Tracer
         from workloads import WORKLOADS
 
         self.args = args
-        self.levels = levels
-        self.slots = levels[-1]
+        self.slots = nproc()
+        self.levels = (1, self.slots)  # of the scaling measurement
         self.seed = args.seed
         self.work = work
         self.run_id = uuid.uuid4().hex[:12]
@@ -208,7 +205,7 @@ class Bench:
 
         self.spark = get_spark(
             "perfbench",
-            cores=cores,
+            cores=check_cores(cores, self.slots),
             extra_conf={
                 "spark.ui.showConsoleProgress": "false",
                 "spark.sql.warehouse.dir": os.path.join(self.work, "warehouse"),
@@ -281,9 +278,9 @@ class Bench:
                 raise RuntimeError(f"control query returned {got}, expected {want}")
         return statistics.median(times)
 
-    def window(self, seconds: float, trace: bool, workload=None) -> dict:
-        """Closed loop, one client: reps back to back until the next one
-        would overrun ``seconds``. Outputs are checked after each rep's
+    def window(self, seconds: float, trace: bool, workload=None, min_reps: int = 1) -> dict:
+        """Closed loop, one client: reps back to back, at least
+        ``min_reps``, until the next one would overrun ``seconds``. Outputs are checked after each rep's
         timed part; a mismatch or an exception counts as a failed rep."""
         from oracle import Mismatch
 
@@ -292,10 +289,10 @@ class Bench:
         reps, layers, harvest = [], [], []
         start = time.perf_counter()
         last = 0.0
-        first = True
+        n = 0
         with self.tracer.span("window", seconds=seconds, traced=trace):
-            while first or time.perf_counter() - start + last <= seconds:
-                first = False
+            while n < min_reps or time.perf_counter() - start + last <= seconds:
+                n += 1
                 i = self.reps_started
                 self.reps_started += 1
                 t_iter = time.perf_counter()
@@ -336,7 +333,7 @@ class Bench:
         """Scaling efficiency from the lowest core level to the window's:
         (throughput_hi / throughput_lo) / (hi / lo), per engine, from
         median rep-part times of the same input. Restarts the session."""
-        lo, hi = self.levels[0], self.levels[-1]
+        lo, hi = self.levels
         if lo == hi or not window:
             return {}
         hi_t = {e: _median(r.part_seconds(e) for r in window) for e in window[0].parts}
@@ -359,7 +356,9 @@ class Bench:
             workload.prepare()
             workload.bind(self.spark)
             workload.warmup(self.spark)
-            layers = self.window(0, trace=True, workload=workload)["layers"]
+            win = self.window(0, trace=True, workload=workload)
+        self._print_split(win["reps"], workload.name)
+        layers = win["layers"]
         keys = {k for d in layers for k in d if k.startswith(prefixes)}
         return {k: _median(d.get(k, 0.0) for d in layers) for k in keys}
 
@@ -370,27 +369,30 @@ class Bench:
 
         args, wl = self.args, self.workload
         trace = bool(args.trace)
-        with RssSampler() as rss, self.tracer.span(
+        # the sampler walks /proc every 100 ms, so only traced runs pay it
+        with RssSampler() if trace else nullcontext() as rss, self.tracer.span(
             "run", workload=wl.name, seed=self.seed, trace=trace
         ), self.tracer.span("workload", workload=wl.name):
             with self.tracer.span("prepare"):
                 input_desc = wl.prepare()
-            setups = [self.setup(k, self.slots) for k in range(SETUPS)]
+            # a traced run reports only the first set-up (session.*), and
+            # its probes need the time a second one would take
+            setups = [self.setup(k, self.slots) for k in range(1 if trace else SETUPS)]
             with self.tracer.span("control"):
                 host = host_fingerprint(nproc(), self.control_query())
             with self.tracer.span("warm_in"):
-                self.window(WARM_IN_S, trace=False)
+                self.window(WARM_IN_S, trace=False, min_reps=WARM_IN_REPS)
             win = self.window(args.seconds, trace)
             reps = win["reps"]
             probes = {}
             if trace and reps:
                 with self.tracer.span("probes"):
                     probes = wl.probes(self.spark, reps)
-            peak_rss = rss.peak
+            peak_rss_mb = rss.peak / 2**20 if trace else None
 
         if trace:
             values = self._per_layer(setups, win, probes)
-            values["memory.peak_rss_mb"] = peak_rss / 2**20
+            values["memory.peak_rss_mb"] = peak_rss_mb
             metrics = {k: {"value": values.get(k, 0.0), "unit": u} for k, u in PER_LAYER.items()}
         else:
             values = {
@@ -418,7 +420,7 @@ class Bench:
             "host": host,
             "inputs": input_desc,
             "setups": setups,
-            "peak_rss_mb": peak_rss / 2**20,
+            "peak_rss_mb": peak_rss_mb,
             "phases_s": self._phases(),
             "reps": [
                 {"rows": r.rows,
@@ -430,7 +432,7 @@ class Bench:
             ],
         }
         if trace:
-            self._print_split(reps)
+            self._print_split(reps, wl.name)
             path = os.path.join(OUT, f"trace-{wl.name}-{self.seed}-{self.run_id}.json")
             self.tracer.write(path, record=record)
             print(f"[perfbench] spans written to {os.path.relpath(path, ROOT)}", file=sys.stderr)
@@ -458,33 +460,36 @@ class Bench:
         harvest = win["harvest_s"]
         rep_s = sum(r.seconds for r in win["reps"])
         values["trace.harvest_ms"] = 1000 * _median(harvest)
+        # Untraced runs fill the status store and keep spans too; what
+        # tracing adds is the store read after each rep. Its share of the
+        # reps' time stands in for the traced/untraced gap, which two
+        # separate runs cannot show: they differ by more than that
+        # between JVM launches.
         values["trace.overhead_pct"] = 100 * sum(harvest) / rep_s if rep_s else 0.0
         return values
 
-    def _print_split(self, reps: list) -> None:
+    def _print_split(self, reps: list, title: str) -> None:
         splits = [r.extra["split"] for r in reps if r.extra.get("split")]
         if not splits:
             return
         s = sorted(splits, key=lambda x: x["wall_ms"])[len(splits) // 2]
-        err = sys.stderr
-        print(f"[perfbench] median rep: wall {s['wall_ms']:.0f} ms over {s['slots']} slots", file=err)
-        for name, ms in s["task_ms"].items():
-            print(f"  {name:<44} task {ms:9.0f} ms  /slots {ms / s['slots']:8.0f} ms", file=err)
-        for name, ms in s["fused_ms"].items():
-            print(f"  {name:<44} task {ms:9.0f} ms  (fused, not summed)", file=err)
-        for name, ms in s["driver_ms"].items():
-            print(f"  {name:<44} wall {ms:9.0f} ms", file=err)
-        print(f"  {'unexplained remainder':<44} {s['unexplained_ms']:14.0f} ms", file=err)
+        slots, err = s["slots"], sys.stderr
+        print(f"[perfbench] {title}, median rep: wall {s['wall_ms']:.0f} ms over {slots} slots", file=err)
+        for engine, e in s["engines"].items():
+            print(f"  {engine}: wall {e['wall_ms']:.0f} ms", file=err)
+            for name, ms in e["task_ms"].items():
+                print(f"    {name:<54} task {ms:9.0f} ms  /slots {ms / slots:8.0f} ms", file=err)
+            for name, ms in e["inside_ms"].items():
+                print(f"    {name:<54} task {ms:9.0f} ms  (overlaps the above, not summed)", file=err)
+            for name, ms in e["driver_ms"].items():
+                print(f"    {name:<54} wall {ms:9.0f} ms", file=err)
+            print(f"    {'explained':<54} {e['explained_ms']:14.0f} ms", file=err)
+            print(f"    {'unexplained remainder':<54} {e['unexplained_ms']:14.0f} ms", file=err)
 
 
 def main(argv=None) -> int:
     sys.path.insert(0, HERE)
     args = parse_args(argv)
-    try:
-        levels = scaling_levels(args.levels, nproc())
-    except ValueError as e:
-        print(f"[perfbench] {e}", file=sys.stderr)
-        return 2
     if args.seconds <= 0:
         print("[perfbench] --seconds must be positive", file=sys.stderr)
         return 2
@@ -505,7 +510,7 @@ def main(argv=None) -> int:
         return 2
     bench = None
     try:
-        bench = Bench(args, levels, work)
+        bench = Bench(args, work)
         record, result = bench.run()
     finally:
         if bench is not None:

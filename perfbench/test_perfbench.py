@@ -21,7 +21,7 @@ import oracle  # noqa: E402
 import run  # noqa: E402
 from pyspark.sql import Row  # noqa: E402
 from sqlstore import parse_value  # noqa: E402
-from workloads import Rep, Workload  # noqa: E402
+from workloads import BatchAgg, Rep, Workload  # noqa: E402
 
 
 @pytest.fixture()
@@ -68,8 +68,8 @@ def test_corrupted_route_count_is_a_failed_run(flagship, tmp_path):
             oracle.check_aggregate(bad, exp)
             return Rep({}, 1, [1000.0])
 
-    args = Namespace(workload="batch_agg", seed=7, seconds=0.0, trace=0, levels=None)
-    bench = run.Bench(args, [1], str(tmp_path / "work"))
+    args = Namespace(workload="batch_agg", seed=7, seconds=0.0, trace=0)
+    bench = run.Bench(args, str(tmp_path / "work"))
     try:
         win = bench.window(0.0, trace=False, workload=Corrupted(bench))
     finally:
@@ -106,13 +106,29 @@ def test_inputs_are_a_function_of_the_seed():
         assert 0.05 <= s.hot_share <= 0.15 and 0.01 <= s.malformed_share <= 0.03
 
 
-def test_levels_above_nproc_are_refused():
+def test_split_sums_only_timers_that_do_not_overlap(tmp_path):
+    """The jvm regex stage already holds the scan feeding it and the
+    fused aggregate, and the python workers' run holds their scan: those
+    inner timers, and the reused workers' start and init, are not added."""
+    wl = BatchAgg(Namespace(slots=4, work=str(tmp_path)))
+    rep = Rep({"jvm": (0.0, 1.0, 0.0), "arrow": (1.0, 3.0, 0.0)}, 10, [])
+    inner = {"scan.time_ms": 400.0, "aggregate.build_ms": 300.0,
+             "skew.shuffle_write_ms": 50.0, "enrich.broadcast_collect_ms": 100.0}
+    out = wl._split(rep, {
+        "jvm": {**inner, "parser.codegen_ms.jvm": 2000.0},
+        "arrow": {**inner, "parser.python_run_ms": 4000.0, "parser.python_init_ms": 9000.0},
+    })
+    assert out["split.wall_ms"] == pytest.approx(3000.0)
+    assert out["split.explained_ms"] == pytest.approx((2000 / 4 + 100) + (4000 / 4 + 100))
+    assert out["split.unexplained_ms"] == pytest.approx(3000.0 - 1700.0)
+
+
+def test_core_levels_above_nproc_are_refused():
     n = run.nproc()
-    assert run.scaling_levels(None, n) == sorted({1, n})
-    with pytest.raises(ValueError):
-        run.scaling_levels(f"1,{n + 1}", n)
-    argv = ["--workload", "batch_agg", "--seed", "1", "--seconds", "1", "--levels", str(n + 1)]
-    assert run.main(argv) == 2
+    assert run.check_cores(n, n) == n
+    for bad in (0, n + 1):
+        with pytest.raises(ValueError):
+            run.check_cores(bad, n)
 
 
 def test_metric_lists_match_benchmark_json():

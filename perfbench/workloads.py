@@ -39,6 +39,7 @@ import os
 import shutil
 import statistics
 import time
+from concurrent.futures import ThreadPoolExecutor
 from dataclasses import dataclass, field
 
 import inputs
@@ -90,6 +91,11 @@ def _median_time(fn, n: int = 3) -> float:
     return statistics.median(times)
 
 
+def _during(execs: list[Execution], a: float, b: float) -> list[Execution]:
+    """The executions submitted within the epoch window [a, b] seconds."""
+    return [ex for ex in execs if a * 1000 <= ex.start_ms <= b * 1000]
+
+
 def _noop(df) -> None:
     df.write.format("noop").mode("overwrite").save()
 
@@ -124,8 +130,14 @@ class Workload:
 
 
 class _Flagship(Workload):
-    N_TURNS = 200_000
-    N_FILES = 8
+    # Rep time per engine against input turns (4 vCPUs, one session):
+    # 50k 0.72 s arrow / 0.54 s jvm, 200k 0.65 / 0.49, 800k 1.22 / 0.83,
+    # so about 0.46 / 0.37 s of every rep is fixed cost. At 800k turns
+    # per-turn work is over half of a rep, and a 10 s window still holds
+    # two reps of a fresh run (at 1.6M it held one). 16 files make tasks
+    # small enough that Spark balances them around a vCPU the host slows.
+    N_TURNS = 800_000
+    N_FILES = 16
     WARM_TURNS = 8_000
     WARM_FILES = 4
 
@@ -163,40 +175,64 @@ class _Flagship(Workload):
 
     def layers(self, rep: Rep, execs: list[Execution]) -> dict[str, float]:
         out = flagship_layers(execs)
+        by_engine = {e: flagship_layers(_during(execs, a, b)) for e, (a, b, _) in rep.parts.items()}
+        out["parser.codegen_ms.jvm"] = by_engine.get("jvm", {}).get("parser.codegen_ms.jvm", 0.0)
         for sink, n in rep.extra["sinks"].items():
             out[f"route.rows.{sink}"] = float(n)
-        out.update(self._split(rep, out))
+        out.update(self._split(rep, by_engine))
         return out
 
-    def _split(self, rep: Rep, lay: dict[str, float]) -> dict[str, float]:
-        """Per-layer task time over slot count next to the rep's wall
-        time; what the layers do not account for is the remainder."""
+    def _split(self, rep: Rep, by_engine: dict[str, dict[str, float]]) -> dict[str, float]:
+        """Per engine, task time over slot count next to the part's wall
+        time; what the layers do not account for is the remainder.
+
+        Only timers that do not overlap are summed. Tasks are pipelined:
+        the jvm regex stage's duration runs from the first row to the
+        last, so it holds the scan feeding it, the fused enrich probe and
+        partial aggregate, and the shuffle writer's inserts; the python
+        workers' run time likewise holds the scan that feeds them. The
+        scan, aggregate and shuffle timers inside those are shown, not
+        summed."""
         slots = self.ctx.slots
-        # the jvm parse runs fused with the scan's consumer and the
-        # partial aggregate in one codegen stage, whose duration already
-        # holds the aggregate's build time: that is shown, not summed
-        task = {
-            "scan": lay.get("scan.time_ms", 0.0),
-            "parse (python run, arrow)": lay.get("parser.python_run_ms", 0.0),
-            "parse (regex stage, jvm)": lay.get("parser.codegen_ms.jvm", 0.0),
-            "exchange (shuffle write)": lay.get("skew.shuffle_write_ms", 0.0),
-            "sink (task commit)": lay.get("sink.task_commit_ms", 0.0),
-        }
-        driver = {
-            "enrich (broadcast collect+build, driver)": lay.get("enrich.broadcast_collect_ms", 0.0)
-            + lay.get("enrich.broadcast_build_ms", 0.0),
-            "sink (job commit, driver)": lay.get("sink.job_commit_ms", 0.0),
-        }
-        wall = rep.seconds * 1000
-        explained = sum(task.values()) / slots + sum(driver.values())
-        rep.extra["split"] = {
-            "wall_ms": wall,
-            "slots": slots,
-            "task_ms": task,
-            "fused_ms": {"aggregate (build)": lay.get("aggregate.build_ms", 0.0)},
-            "driver_ms": driver,
-            "unexplained_ms": wall - explained,
-        }
+        engines = {}
+        for engine, lay in by_engine.items():
+            if engine == "jvm":
+                task = {
+                    "regex stage (scan, parse, enrich probe, partial agg)":
+                        lay.get("parser.codegen_ms.jvm", 0.0),
+                }
+            else:
+                task = {
+                    "python workers run (scan feeds it, parse)": lay.get("parser.python_run_ms", 0.0),
+                }
+            task["sink (task commit)"] = lay.get("sink.task_commit_ms", 0.0)
+            inside = {
+                "scan": lay.get("scan.time_ms", 0.0),
+                # reused workers report start and init times reaching back
+                # before the rep, so these do not fit in its wall time
+                "python workers start + init": lay.get("parser.python_start_ms", 0.0)
+                + lay.get("parser.python_init_ms", 0.0),
+                "aggregate (build)": lay.get("aggregate.build_ms", 0.0),
+                "exchange (shuffle write)": lay.get("skew.shuffle_write_ms", 0.0),
+            }
+            driver = {
+                "enrich (broadcast collect+build)": lay.get("enrich.broadcast_collect_ms", 0.0)
+                + lay.get("enrich.broadcast_build_ms", 0.0),
+                "sink (job commit)": lay.get("sink.job_commit_ms", 0.0),
+            }
+            wall = rep.part_seconds(engine) * 1000
+            explained = sum(task.values()) / slots + sum(driver.values())
+            engines[engine] = {
+                "wall_ms": wall,
+                "task_ms": task,
+                "inside_ms": inside,
+                "driver_ms": driver,
+                "explained_ms": explained,
+                "unexplained_ms": wall - explained,
+            }
+        wall = sum(e["wall_ms"] for e in engines.values())
+        explained = sum(e["explained_ms"] for e in engines.values())
+        rep.extra["split"] = {"slots": slots, "wall_ms": wall, "engines": engines}
         return {
             "split.wall_ms": wall,
             "split.explained_ms": explained,
@@ -248,8 +284,8 @@ class BatchAgg(_Flagship):
 class BatchFanout(_Flagship):
     name = "batch_fanout"
     # writing full rows makes a rep about twice as slow per turn as
-    # batch_agg's; half the input keeps a rep short
-    N_TURNS = 100_000
+    # batch_agg's; half the input keeps the traced run short
+    N_TURNS = 400_000
 
     def _out(self, engine: str, i: int) -> str:
         return os.path.join(self.dir, f"out-{i}-{engine}")
@@ -307,6 +343,11 @@ def _stream_exec_kind(ex: Execution) -> str:
 
 class StreamLedger(Workload):
     name = "stream_ledger"
+    # Micro-batch time against turns per file (4 vCPUs): 8k 1.01 s,
+    # 32k 1.24 s, 125k 2.56 s, so about 0.9 s of a batch is fixed cost.
+    # At 8k that fixed cost is ~90 % of a batch, which is what this
+    # workload measures; a rep (two engines, two batches each) takes
+    # about 7 s in a fresh run, so a 10 s window holds one.
     FILE_TURNS = 8_000
     N_FILES = 2
 
@@ -434,7 +475,7 @@ class StreamLedger(Workload):
 class CatalogQueries(Workload):
     name = "catalog_queries"
     QUERIES = ("line_dedup", "dup_families", "conv_curation")
-    N_DOCS, N_EVENTS, N_USERS = 500, 10_000, 150
+    N_DOCS, N_EVENTS, N_USERS = 5_000, 100_000, 1_500  # TESTDATA.md sf0.1
     WARM = (60, 1_000, 20)
 
     def prepare(self) -> dict:
@@ -448,15 +489,20 @@ class CatalogQueries(Workload):
         inputs.write_catalog_tables(self.ctx.seed + 1, self.warm, *self.WARM)
         oracle.catalog_views(self.ctx.duck, self.tables)
         sql = contract.oracle_sql()
-        self.expected = {
-            q: oracle.result_digest(self.ctx.duck.execute(sql[q]).df()) for q in self.QUERIES
-        }
+        # The DuckDB oracle takes about 40 s at sf0.1 (dup_families most
+        # of it), so it runs beside the untimed warm-up, which waits for it
+        pool = ThreadPoolExecutor(1)
+        self._expected = pool.submit(
+            lambda: {q: oracle.result_digest(self.ctx.duck.execute(sql[q]).df()) for q in self.QUERIES}
+        )
+        pool.shutdown(wait=False)
         self.queries = {q: contract.queries()[q] for q in self.QUERIES}
         return desc
 
     def warmup(self, spark) -> None:
         for q in self.QUERIES:
             self.queries[q](spark, self.warm).toPandas()
+        self.expected = self._expected.result()
 
     def rep(self, spark, i: int) -> Rep:
         parts: dict = {}
@@ -471,9 +517,8 @@ class CatalogQueries(Workload):
     def layers(self, rep: Rep, execs: list[Execution]) -> dict[str, float]:
         out = {}
         for q, (a, b, _) in rep.parts.items():
-            mine = [ex for ex in execs if a * 1000 <= ex.start_ms <= b * 1000]
             out[f"catalog.{q}_s"] = b - a
-            out[f"catalog.{q}.shuffle_bytes"] = shuffle_bytes(mine)
+            out[f"catalog.{q}.shuffle_bytes"] = shuffle_bytes(_during(execs, a, b))
         return out
 
 
