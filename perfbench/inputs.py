@@ -8,8 +8,8 @@ Transcripts follow the ``BASELINE.json`` input_hint schema
 ``(conv_id, turn_idx, role, text, tool, ts)`` with the log-line payload of
 FIXTURES.md §1. Unlike ``transcripts.synthetic_transcripts`` (fixed 10 %
 hot conversation, fixed 2 % malformed rows, fixed body length), the seed
-picks the hot-conversation share, the malformed share and the body length,
-so ten seeds exercise ten input shapes.
+picks the hot-conversation share, the malformed share and the spread of
+the body length, so ten seeds exercise ten input shapes.
 
 Catalog tables mimic the ``documents`` and ``events`` tables of TESTDATA.md
 at sf0.1 (same schema, row counts and value distributions), in a
@@ -51,6 +51,7 @@ EVENT_TYPES = np.array(["signup", "click", "error", "view", "purchase"])
 BASE_TS_S = 1605266885
 EVENTS_START_US = 1704067200 * 10**6  # 2024-01-01 00:00:00 UTC
 BODY_POOL = 4096
+BODY_WORDS_MEAN = 7
 
 
 @dataclass(frozen=True)
@@ -64,13 +65,16 @@ class TranscriptShape:
 
 
 def transcript_shape(seed: int) -> TranscriptShape:
+    """The body length spreads 4-10, 5-9 or 6-8 words, always about a
+    mean of 7: parse work per turn scales with it, and a seed that moved
+    the mean would move turns/s by ~10 % whatever the program did."""
     rng = np.random.default_rng([seed, 0])
     lo = int(rng.integers(4, 7))
     return TranscriptShape(
         hot_share=round(float(rng.uniform(0.05, 0.15)), 4),
         malformed_share=round(float(rng.uniform(0.01, 0.03)), 4),
         body_words_min=lo,
-        body_words_max=lo + 4,
+        body_words_max=2 * BODY_WORDS_MEAN - lo,
     )
 
 

@@ -3,7 +3,7 @@
 
 Run from the repository root:
 
-    python3 perfbench/run.py --workload batch_agg --seed 1 --seconds 10 --trace 0
+    python3 perfbench/run.py --workload batch_agg --seed 1 --seconds 16 --trace 0
 
 The last line of standard output is one JSON object
 ``{"correct", "attempted", "failed", "metrics"}``: with ``--trace 0`` the
@@ -114,11 +114,12 @@ PER_LAYER = {
 
 CONTROL_ROWS = 2_000_000
 # Untimed reps on the full input before the window, so JIT and caches
-# settle at the size the window measures: after 4 s of warm-in the CPU
-# time of successive batch_agg reps still fell by up to 40 %, and after
-# one 800k-turn rep the next was still 10-20 % faster.
-WARM_IN_S = 10.0
+# settle at the size the window measures. A count, not a time: a run on
+# a slowed host would otherwise start its window less warm. Two reps run
+# each parse engine at least once after set-up.
 WARM_IN_REPS = 2
+# Warm-in of the scaling phase, which runs at one core.
+WARM_IN_S = 6.0
 
 
 def nproc() -> int:
@@ -283,6 +284,7 @@ class Bench:
         ``min_reps``, until the next one would overrun ``seconds``. Outputs are checked after each rep's
         timed part; a mismatch or an exception counts as a failed rep."""
         from oracle import Mismatch
+        from tracing import host_cpu_ticks, steal_pct
 
         workload = workload or self.workload
 
@@ -296,6 +298,7 @@ class Bench:
                 i = self.reps_started
                 self.reps_started += 1
                 t_iter = time.perf_counter()
+                ticks = host_cpu_ticks()
                 offset = self.store.count() if trace else 0
                 self.attempted += 1
                 with self.tracer.span("rep", i=i) as attrs:
@@ -307,7 +310,8 @@ class Bench:
                         traceback.print_exc(file=sys.stderr)
                         self._fail(attrs, "".join(traceback.format_exception_only(e)).strip())
                     else:
-                        attrs.update(seconds=rep.seconds, rows=rep.rows)
+                        rep.steal_pct = steal_pct(ticks, host_cpu_ticks())
+                        attrs.update(seconds=rep.seconds, rows=rep.rows, steal_pct=rep.steal_pct)
                         for part, (a, b, cpu) in rep.parts.items():
                             self.tracer.add("part", a, b, part=part, cpu_s=cpu)
                         if trace:
@@ -351,11 +355,13 @@ class Bench:
     def side_workload(self, workload, prefixes: tuple[str, ...]) -> dict[str, float]:
         """Layer metrics (those starting with ``prefixes``) of a workload
         measured inside another one's traced run, on the same session:
-        one traced rep after a warm-up."""
+        one traced rep after a warm-up of both engines."""
+        from workloads import ENGINES
+
         with self.tracer.span("side_workload", workload=workload.name):
             workload.prepare()
             workload.bind(self.spark)
-            workload.warmup(self.spark)
+            workload.warmup(self.spark, ENGINES)
             win = self.window(0, trace=True, workload=workload)
         self._print_split(win["reps"], workload.name)
         layers = win["layers"]
@@ -381,7 +387,7 @@ class Bench:
             with self.tracer.span("control"):
                 host = host_fingerprint(nproc(), self.control_query())
             with self.tracer.span("warm_in"):
-                self.window(WARM_IN_S, trace=False, min_reps=WARM_IN_REPS)
+                self.window(0, trace=False, min_reps=WARM_IN_REPS)
             win = self.window(args.seconds, trace)
             reps = win["reps"]
             probes = {}
@@ -427,6 +433,7 @@ class Bench:
                  "parts_s": {p: r.part_seconds(p) for p in r.parts},
                  "parts_cpu_s": {p: r.part_cpu_seconds(p) for p in r.parts},
                  "latencies_ms": r.latencies_ms,
+                 "steal_pct": r.steal_pct,
                  "split": r.extra.get("split")}
                 for r in reps
             ],

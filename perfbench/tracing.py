@@ -96,6 +96,22 @@ def tree_cpu_seconds() -> float:
     return sum(_cpu_seconds(p) for p in descendants(os.getpid()))
 
 
+def host_cpu_ticks() -> tuple[int, int]:
+    """(busy, stolen) clock ticks of all vCPUs since boot, from /proc/stat.
+    Stolen ticks are those the hypervisor gave to other guests while a
+    vCPU had work: on a shared host they slow every timing in a run."""
+    with open("/proc/stat") as f:
+        t = [int(x) for x in f.readline().split()[1:9]]
+    # user nice system idle iowait irq softirq steal
+    return t[0] + t[1] + t[2] + t[5] + t[6], t[7]
+
+
+def steal_pct(before: tuple[int, int], after: tuple[int, int]) -> float:
+    """Stolen share of the vCPU time the run wanted between two readings."""
+    busy, stolen = after[0] - before[0], after[1] - before[1]
+    return 100 * stolen / (busy + stolen) if busy + stolen else 0.0
+
+
 def descendants(pid: int) -> list[int]:
     children: dict[int, list[int]] = {}
     for entry in os.listdir("/proc"):

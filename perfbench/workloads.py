@@ -16,8 +16,8 @@ Workloads with end-to-end metrics:
   extract groups, so scan, parse and broadcast enrich do almost all the
   work. This is where a parse or enrich gain shows.
 - ``stream_ledger``: ``streaming.job.run_streaming_pipeline`` with one
-  file per trigger, once per parse engine: small ledgered micro-batches
-  whose fixed per-batch cost dominates. Every extract
+  file per trigger, the parse engines taking turns from rep to rep: small
+  ledgered micro-batches whose fixed per-batch cost dominates. Every extract
   group is consumed and full rows are written, so a parse gain that comes
   only from pruning shows nothing here.
 
@@ -25,12 +25,13 @@ Measured only inside a traced run (every run pays a JVM launch and a cold
 warm-up, so a full set of runs of two more workloads would not fit the
 time budget of one benchmark pass):
 
-- ``BatchFanout`` (in ``batch_agg``'s): salted ``hash(conv_id)``
+- ``BatchFanout`` (in ``stream_ledger``'s): salted ``hash(conv_id)``
   repartition, ``sinks.writer.write_routed``, then the aggregate over the
   written sinks: the exchange, skew and sink layers.
-- ``CatalogQueries`` (in ``stream_ledger``'s): the catalog queries whose
-  identity keys go through ``functions.hashing.md5_60`` (``line_dedup``,
-  ``dup_families``, ``conv_curation``), each hash-equal to its oracle.
+- ``CatalogQueries``: the catalog queries whose identity keys go through
+  ``functions.hashing.md5_60``, each hash-equal to its oracle:
+  ``dup_families`` in ``batch_agg``'s, ``line_dedup`` and
+  ``conv_curation`` in ``stream_ledger``'s.
 """
 
 from __future__ import annotations
@@ -48,6 +49,11 @@ from sqlstore import Execution, flagship_layers, shuffle_bytes
 from tracing import tree_cpu_seconds
 
 ENGINES = ("arrow", "jvm")
+# Set-up warms the program's default engine only (PipelineOptions.engine):
+# set-up is what a user waits for before the first result, and a second
+# cold streaming query per set-up cost 3-7 s of every run. The other
+# engine's first use falls in the untimed warm-in.
+SETUP_ENGINES = ("arrow",)
 
 
 @dataclass
@@ -60,6 +66,7 @@ class Rep:
     rows: int
     latencies_ms: list[float]
     extra: dict = field(default_factory=dict)
+    steal_pct: float = 0.0  # of the host's vCPU time while the rep ran
 
     @property
     def seconds(self) -> float:
@@ -113,7 +120,7 @@ class Workload:
     def bind(self, spark) -> None:
         """Called after every session start."""
 
-    def warmup(self, spark) -> None:
+    def warmup(self, spark, engines=SETUP_ENGINES) -> None:
         raise NotImplementedError
 
     def rep(self, spark, i: int) -> Rep:
@@ -130,13 +137,15 @@ class Workload:
 
 
 class _Flagship(Workload):
-    # Rep time per engine against input turns (4 vCPUs, one session):
-    # 50k 0.72 s arrow / 0.54 s jvm, 200k 0.65 / 0.49, 800k 1.22 / 0.83,
-    # so about 0.46 / 0.37 s of every rep is fixed cost. At 800k turns
-    # per-turn work is over half of a rep, and a 10 s window still holds
-    # two reps of a fresh run (at 1.6M it held one). 16 files make tasks
-    # small enough that Spark balances them around a vCPU the host slows.
-    N_TURNS = 800_000
+    # Rep time per engine against input turns (4 vCPUs, one session, one
+    # sitting): 50k 0.72 s arrow / 0.54 s jvm, 200k 0.65 / 0.49, 800k
+    # 1.22 / 0.83, so about 0.46 / 0.37 s of every rep is fixed cost. At
+    # 400k turns per-turn work is over half of a rep, and a 16 s window
+    # holds 4-14 reps with the host's load; at 800k a 10 s window held
+    # two, whose median moved with every rep the shared host slowed.
+    # 16 files make tasks small enough that Spark balances them around a
+    # vCPU the host slows.
+    N_TURNS = 400_000
     N_FILES = 16
     WARM_TURNS = 8_000
     WARM_FILES = 4
@@ -157,8 +166,8 @@ class _Flagship(Workload):
     def check(self, engine: str, result, i: int) -> dict[str, int]:
         return oracle.check_aggregate(result, self.expected)
 
-    def warmup(self, spark) -> None:
-        for engine in ENGINES:
+    def warmup(self, spark, engines=SETUP_ENGINES) -> None:
+        for engine in engines:
             self.run_once(spark, self.warm, engine, -1)
 
     def rep(self, spark, i: int) -> Rep:
@@ -253,8 +262,9 @@ class BatchAgg(_Flagship):
     def probes(self, spark, window: list[Rep]) -> dict[str, float]:
         """Parse and enrich timed on an already-materialized input, with
         every extract group selected so no pruning applies; then the
-        fanout layers, then the scaling phase (which restarts the
-        session at the lowest core level, so it comes last)."""
+        ``dup_families`` catalog query, then the scaling phase (which
+        restarts the session at the lowest core level, so it comes
+        last)."""
         from log_formatter_spark.lookups import role_lookup, tool_lookup
         from log_formatter_spark.operators.enrich import enrich_role_tool
         from log_formatter_spark.operators.parser import PARSE_OK, ParserConfig, apply_parser
@@ -276,7 +286,7 @@ class BatchAgg(_Flagship):
             )
         parsed.unpersist()
         t.unpersist()
-        out.update(self.ctx.side_workload(BatchFanout(self.ctx), ("skew.", "sink.")))
+        out.update(self.ctx.side_workload(CatalogQueries(self.ctx, ("dup_families",)), ("catalog.",)))
         out.update(self.ctx.scaling(window))
         return out
 
@@ -346,8 +356,8 @@ class StreamLedger(Workload):
     # Micro-batch time against turns per file (4 vCPUs): 8k 1.01 s,
     # 32k 1.24 s, 125k 2.56 s, so about 0.9 s of a batch is fixed cost.
     # At 8k that fixed cost is ~90 % of a batch, which is what this
-    # workload measures; a rep (two engines, two batches each) takes
-    # about 7 s in a fresh run, so a 10 s window holds one.
+    # workload measures; a rep (one engine, two batches) takes 1.8-4.5 s
+    # with the host's load, so a 16 s window holds 3-8.
     FILE_TURNS = 8_000
     N_FILES = 2
 
@@ -373,8 +383,8 @@ class StreamLedger(Workload):
             PipelineOptions(engine=engine), max_files_per_trigger=1,
         )
 
-    def warmup(self, spark) -> None:
-        for engine in ENGINES:
+    def warmup(self, spark, engines=SETUP_ENGINES) -> None:
+        for engine in engines:
             out = os.path.join(self.dir, f"run-warm-{engine}")
             self._run(spark, self.warm, out, engine)
             shutil.rmtree(out)
@@ -400,14 +410,13 @@ class StreamLedger(Workload):
         return batches, led
 
     def rep(self, spark, i: int) -> Rep:
-        """One streaming query per engine, each over all input files;
-        the ledger of each is checked against the oracle."""
+        """One streaming query over all input files, the engines taking
+        turns from rep to rep (a rep per engine would leave a 20 s window
+        two samples); its ledger is checked against the oracle."""
         shutil.rmtree(os.path.join(self.dir, f"run-{i - 1}"), ignore_errors=True)
         parts: dict = {}
-        batches, led = [], {}
-        for engine in ENGINES if i % 2 == 0 else ENGINES[::-1]:
-            b, led = self._stream_once(spark, engine, os.path.join(self.dir, f"run-{i}", engine), parts)
-            batches += b
+        engine = ENGINES[i % 2]
+        batches, led = self._stream_once(spark, engine, os.path.join(self.dir, f"run-{i}", engine), parts)
         sinks = {k[len("routed_"):]: v for k, v in led.items() if k.startswith("routed_")}
         return Rep(
             parts, self.FILE_TURNS * self.N_FILES,
@@ -444,7 +453,7 @@ class StreamLedger(Workload):
     def probes(self, spark, window: list[Rep]) -> dict[str, float]:
         """MetricsLedger timed from outside on a copy of the newest
         run's ledger (recovery from disk, then appending batches); then
-        the catalog queries."""
+        the fanout layers and the other two catalog queries."""
         from log_formatter_spark.operators.route import DEFAULT_ROUTES
         from log_formatter_spark.streaming.ledger import MetricsLedger
 
@@ -465,7 +474,10 @@ class StreamLedger(Workload):
         out["stream.microbatch_p90_ms"] = (
             statistics.quantiles(pooled, n=10)[-1] if len(pooled) > 1 else pooled[0]
         )
-        out.update(self.ctx.side_workload(CatalogQueries(self.ctx), ("catalog.",)))
+        out.update(self.ctx.side_workload(BatchFanout(self.ctx), ("skew.", "sink.")))
+        out.update(self.ctx.side_workload(
+            CatalogQueries(self.ctx, ("line_dedup", "conv_curation")), ("catalog.",)
+        ))
         return out
 
 
@@ -473,10 +485,18 @@ class StreamLedger(Workload):
 
 
 class CatalogQueries(Workload):
+    """Some of the catalog queries. Their DuckDB oracle takes about 40 s
+    for ``dup_families`` and 15 s for the other two at sf0.1, so the
+    queries are split over the two traced runs to keep each within the
+    time a run may take."""
+
     name = "catalog_queries"
-    QUERIES = ("line_dedup", "dup_families", "conv_curation")
     N_DOCS, N_EVENTS, N_USERS = 5_000, 100_000, 1_500  # TESTDATA.md sf0.1
     WARM = (60, 1_000, 20)
+
+    def __init__(self, ctx, queries: tuple[str, ...]):
+        super().__init__(ctx)
+        self.names = queries
 
     def prepare(self) -> dict:
         from log_formatter_spark import contract
@@ -489,18 +509,17 @@ class CatalogQueries(Workload):
         inputs.write_catalog_tables(self.ctx.seed + 1, self.warm, *self.WARM)
         oracle.catalog_views(self.ctx.duck, self.tables)
         sql = contract.oracle_sql()
-        # The DuckDB oracle takes about 40 s at sf0.1 (dup_families most
-        # of it), so it runs beside the untimed warm-up, which waits for it
+        # the DuckDB oracle runs beside the untimed warm-up, which waits for it
         pool = ThreadPoolExecutor(1)
         self._expected = pool.submit(
-            lambda: {q: oracle.result_digest(self.ctx.duck.execute(sql[q]).df()) for q in self.QUERIES}
+            lambda: {q: oracle.result_digest(self.ctx.duck.execute(sql[q]).df()) for q in self.names}
         )
         pool.shutdown(wait=False)
-        self.queries = {q: contract.queries()[q] for q in self.QUERIES}
+        self.queries = {q: contract.queries()[q] for q in self.names}
         return desc
 
-    def warmup(self, spark) -> None:
-        for q in self.QUERIES:
+    def warmup(self, spark, engines=SETUP_ENGINES) -> None:
+        for q in self.names:
             self.queries[q](spark, self.warm).toPandas()
         self.expected = self._expected.result()
 
@@ -508,7 +527,7 @@ class CatalogQueries(Workload):
         parts: dict = {}
         results = {
             q: _timed(parts, q, lambda q=q: self.queries[q](spark, self.tables).toPandas())
-            for q in self.QUERIES
+            for q in self.names
         }
         for q, pdf in results.items():
             oracle.check_digest(q, oracle.result_digest(pdf), self.expected[q])
