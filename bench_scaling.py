@@ -16,19 +16,22 @@ Measurement fidelity rules (see BENCH.md for the full analysis):
   on a 32-core box silently borrows extra cores for GC threads and
   Python workers, inflating the baseline and understating scaling — a
   real N-core executor has no such spare cores.
-- **Default levels 2 vs 8**: on one box, all cores share one DRAM
+- **Default levels: a quarter of min(8, nproc) vs min(8, nproc)** —
+  2 vs 8 on a host with ≥8 cores, 1 vs 4 on a 4-core one. A level above
+  nproc would time oversubscribed threads, not cores, so the protocol
+  refuses one. The cap at 8: on one box, all cores share one DRAM
   controller. This string-heavy pipeline saturates the shared memory
   system between 8 and 32 threads (measured: 8→32 tops out at ~2.5×
   regardless of process layout — one JVM, local-cluster, or 4
   independent pinned JVMs all hit the same wall). A real 4× cluster
   multiplies memory bandwidth 4×; a single box cannot. 2 vs 8 pinned
   cores measures the job's intrinsic scaling below that hardware
-  ceiling; the 8 vs 32 numbers are reported alongside with the caveat.
+  ceiling.
 - Input ≥10^7 synthetic turns, generated once and reused, so
   task-launch overhead doesn't dominate and generation is excluded.
 
 Usage:
-    python bench_scaling.py [--turns 40000000] [--levels 2,8]
+    python bench_scaling.py [--turns 40000000] [--levels LO,HI]
                             [--engine jvm|arrow] [--no-pin]
 Child mode (internal):
     python bench_scaling.py --child <cores> <input_dir> <engine> <pin>
@@ -45,6 +48,10 @@ import time
 INPUT_TMPL = "/tmp/lfs_bench_input_{n}"
 
 
+def _nproc() -> int:
+    return len(os.sched_getaffinity(0))
+
+
 def _gen_input(n_turns: int) -> str:
     path = INPUT_TMPL.format(n=n_turns)
     if os.path.exists(os.path.join(path, "_SUCCESS")):
@@ -52,7 +59,7 @@ def _gen_input(n_turns: int) -> str:
     from log_formatter_spark import get_spark
     from log_formatter_spark.transcripts import synthetic_transcripts
 
-    spark = get_spark("lfs-bench-gen", cores=32)
+    spark = get_spark("lfs-bench-gen", cores=_nproc())
     spark.sparkContext.setLogLevel("ERROR")
     # 64 files: file-split parallelism identical at every level
     synthetic_transcripts(spark, n_turns).repartition(64).write.mode(
@@ -94,7 +101,8 @@ def main() -> None:
         return
 
     turns = 40_000_000
-    levels = [2, 8]
+    nproc = _nproc()
+    levels = [max(1, min(8, nproc) // 4), min(8, nproc)]
     engine = "jvm"
     pin = True
     args = sys.argv[1:]
@@ -107,6 +115,12 @@ def main() -> None:
             engine = args[i + 1]
         elif a == "--no-pin":
             pin = False
+    over = [c for c in levels if c > nproc]
+    if over:
+        raise SystemExit(
+            f"--levels {over} exceed nproc={nproc}: an oversubscribed level "
+            "measures time-sharing, not scaling"
+        )
 
     input_dir = _gen_input(turns)
     results: dict[int, dict] = {}

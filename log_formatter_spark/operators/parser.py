@@ -15,8 +15,8 @@ Reference semantics being reproduced (all citations into /root/reference):
 - Group names ending in ``_`` are extracted then dropped
   (parser.go:89-92,100-102).
 - Non-participating groups: Go yields ``""`` for a group that did not
-  participate in an otherwise-successful match; pandas ``str.extract``
-  yields NaN — normalized to ``""`` here (SURVEY.md §7.3).
+  participate in an otherwise-successful match; both engines yield
+  ``""`` too (SURVEY.md §7.3).
 - Two-level label extraction: per-component ``labels[].regexprs[]`` run a
   second extraction on an extracted component; failures are warnings,
   not discards (parser.go:79-97) — rendered as null label columns, and
@@ -28,15 +28,14 @@ Reference semantics being reproduced (all citations into /root/reference):
 Engineering: the reference recompiles the regex per document
 (util/regexp.go:9, acknowledged TODO parser.go:39). Here the pattern is
 compiled once and the extraction is Arrow-vectorized over record
-batches — no per-row Python, per the north rule. Three physical
+batches — no per-row Python, per the north rule. Patterns are RE2,
+Go's regexp dialect, with named groups only (unnamed groups are written
+``(?:...)``); ``apply_parser`` refuses anything else. Two physical
 engines, identical semantics:
 
-- ``engine="arrow"`` + RE2-compatible pattern → Spark 4 ``arrow_udf``
-  running ``pyarrow.compute.extract_regex`` (C++ RE2 on the Arrow
-  buffers, zero pandas; RE2 is Go's regexp engine, so this is also the
-  parity path);
-- ``engine="arrow"`` + non-RE2 pattern (backrefs/lookaround) → pandas
-  UDF ``str.extract`` fallback;
+- ``engine="arrow"`` → Spark 4 ``arrow_udf`` running
+  ``pyarrow.compute.extract_regex`` (C++ RE2 on the Arrow buffers, zero
+  pandas);
 - ``engine="jvm"`` → ``rlike``/``regexp_extract`` expressions inside
   whole-stage codegen (plan-time pruning of unused groups).
 """
@@ -46,18 +45,14 @@ from __future__ import annotations
 import re
 from dataclasses import dataclass, field
 
-import pandas as pd
 import pyarrow as pa
 import pyarrow.compute as pc
 from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
-from pyspark.sql.pandas.functions import pandas_udf
+from pyspark.sql.functions import arrow_udf
 from pyspark.sql.types import BooleanType, StringType, StructField, StructType
 
 PARSE_OK = "parse_ok"
-# Wrapper group capturing the whole match: lets one vectorized extract pass
-# distinguish "no match" (wrapper NaN) from "matched, group empty".
-_WRAP = "lfs_match_"
 
 
 @dataclass(frozen=True)
@@ -74,7 +69,7 @@ class ParserConfig:
     target_field: str = "text"
     labels: tuple[LabelRule, ...] = field(default_factory=tuple)
     error_tolerant: bool = False
-    engine: str = "arrow"  # "arrow" (pandas UDF) | "jvm" (regexp_extract)
+    engine: str = "arrow"  # "arrow" (arrow_udf over RE2) | "jvm" (regexp_extract)
 
 
 def _kept_groups(pattern: str) -> list[str]:
@@ -89,73 +84,47 @@ def _merge(df: DataFrame, new_cols: dict[str, Column]) -> DataFrame:
     return df.select(*sel)
 
 
-def _re2_compatible(pattern: str) -> bool:
-    """True if pyarrow's RE2 accepts the pattern (no backrefs/lookaround).
-
-    Checked once on the driver so every executor takes the same path.
-    RE2 is also what the reference uses (Go regexp), so the fast path is
-    the parity path.
-    """
+def _require_re2(pattern: str) -> None:
+    """Refuse, on the driver, a pattern RE2 (Go's regexp, the reference's
+    dialect) cannot run as an extraction: backreferences, lookaround and
+    unnamed capture groups. Both engines then accept the same patterns."""
     try:
         pc.extract_regex(pa.array([], type=pa.string()), pattern=pattern)
-        return True
-    except pa.lib.ArrowException:
-        return False
+    except pa.ArrowInvalid as e:
+        raise ValueError(f"parser pattern {pattern!r} is not an RE2 extraction: {e}") from None
 
 
 def _arrow_extract_cols(pattern: str, target: str, with_flag: bool) -> dict[str, Column]:
     """Build {name: Column} for one Arrow-vectorized extraction pass.
 
-    Fast path: ``pyarrow.compute.extract_regex`` — RE2 running in C++
+    ``pyarrow.compute.extract_regex`` — RE2 running in C++
     over the Arrow buffers, no pandas materialization, no GC pressure
     (~3× faster than pandas ``str.extract`` and exactly the reference's
     regex dialect). Non-match → null struct; a non-participating group
     in a match → "" — both precisely the Go semantics
-    (util/regexp.go:12-21). Python-``re``-only patterns (backrefs,
-    lookaround) fall back to the pandas path.
+    (util/regexp.go:12-21).
     """
     kept = _kept_groups(pattern)
-    use_re2 = _re2_compatible(pattern)
-    wrapped = f"(?P<{_WRAP}>{pattern})"
     names = kept + ([PARSE_OK] if with_flag else [])
     schema = StructType(
         [StructField(n, StringType()) for n in kept]
         + ([StructField(PARSE_OK, BooleanType())] if with_flag else [])
     )
 
-    if use_re2:
-        from pyspark.sql.functions import arrow_udf
-
-        # Arrow-native UDF: pa.Array in, pa.StructArray out — zero pandas
-        # materialization on either side of the RE2 call (measured 1.4×
-        # over the pandas_udf wrapper of the same kernel).
-        @arrow_udf(schema)
-        def parse(arr: pa.Array) -> pa.Array:
-            res = pc.extract_regex(arr, pattern=pattern)
-            ok = pc.is_valid(res)
-            nulls = pa.nulls(len(arr), pa.string())
-            # matched rows: non-participating group -> "" (RE2 = Go
-            # parity); unmatched rows: null (label failure = null)
-            children = [pc.if_else(ok, res.field(n), nulls) for n in kept]
-            if with_flag:
-                children.append(ok)
-            return pa.StructArray.from_arrays(children, names=names)
-
-    else:
-
-        @pandas_udf(schema)
-        def parse(s: pd.Series) -> pd.DataFrame:
-            pat = re.compile(wrapped)  # compiled once per executor python worker
-            ext = s.str.extract(pat)
-            ok = ext[_WRAP].notna()
-            out = {}
-            for n in kept:
-                # matched rows: non-participating group -> "" (Go parity);
-                # unmatched rows: None (label failure = null, not discard)
-                out[n] = ext[n].fillna("").where(ok, None)
-            if with_flag:
-                out[PARSE_OK] = ok
-            return pd.DataFrame(out)
+    # Arrow-native UDF: pa.Array in, pa.StructArray out — zero pandas
+    # materialization on either side of the RE2 call (measured 1.4×
+    # over a pandas UDF wrapping the same kernel).
+    @arrow_udf(schema)
+    def parse(arr: pa.Array) -> pa.Array:
+        res = pc.extract_regex(arr, pattern=pattern)
+        ok = pc.is_valid(res)
+        nulls = pa.nulls(len(arr), pa.string())
+        # matched rows: non-participating group -> "" (RE2 = Go
+        # parity); unmatched rows: null (label failure = null)
+        children = [pc.if_else(ok, res.field(n), nulls) for n in kept]
+        if with_flag:
+            children.append(ok)
+        return pa.StructArray.from_arrays(children, names=names)
 
     struct = parse(F.col(target))
     cols = {n: struct.getField(n) for n in kept}
@@ -176,13 +145,14 @@ def _to_java_regex(pattern: str) -> str:
 def _jvm_extract_cols(pattern: str, target: str, with_flag: bool) -> dict[str, Column]:
     """Whole-stage-codegen path: rlike + one regexp_extract per group.
 
-    Value semantics match the arrow path for the RE2-compatible pattern
-    subset used by our fixtures (no backrefs/lookaround).
+    Value semantics match the arrow path on the RE2 patterns
+    ``apply_parser`` admits; the engine-agreement tests pin this on the
+    fixtures' patterns.
     """
     compiled = re.compile(pattern)
     jpat = _to_java_regex(pattern)
-    # NULL input text: rlike(NULL) is NULL, but the arrow/pandas engines
-    # report parse_ok=false for missing text — coalesce so all three
+    # NULL input text: rlike(NULL) is NULL, but the arrow engine
+    # reports parse_ok=false for missing text — coalesce so both
     # engines (and the DuckDB oracle) agree that null text is a parse
     # failure, not an unknown
     ok = F.coalesce(F.col(target).rlike(jpat), F.lit(False))
@@ -207,7 +177,12 @@ def apply_parser(df: DataFrame, cfg: ParserConfig) -> DataFrame:
     silent discard, pipeline.go:163-166, made auditable). With
     ``error_tolerant=True`` all rows get ``parse_ok=true`` and failed
     rows simply keep null fields (parser.go:50-56).
+
+    Raises ``ValueError``, naming the pattern, when the components
+    pattern or a label pattern is not an RE2 extraction (``_require_re2``).
     """
+    for rx in (cfg.components_regex, *(rx for rule in cfg.labels for rx in rule.regexprs)):
+        _require_re2(rx)
     build = _arrow_extract_cols if cfg.engine == "arrow" else _jvm_extract_cols
 
     comp_cols = build(cfg.components_regex, cfg.target_field, with_flag=True)

@@ -5,9 +5,8 @@ target index is computed from its own fields via a ``{{field}}`` template
 (agent/output/elasticsearch/elasticsearch.go:82,111 +
 util/config.go:16-32, e.g. ``index: "logs-{{level}}"``). Here the route
 is a deterministic ``when/otherwise`` expression producing a ``route``
-column; sinks consume it either via ``partitionBy(route)`` (single-pass
-write) or per-sink filtered writes inside ``foreachBatch``
-(sinks/writer.py).
+column; sinks consume it via one ``partitionBy(route)`` write, in batch
+and once per streaming micro-batch (sinks/writer.py).
 
 Default route table per FIXTURES.md §3:
 

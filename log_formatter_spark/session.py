@@ -23,8 +23,8 @@ def get_spark(
 
     - AQE on (coalesce + skew-join): runtime re-planning is our first line
       of skew defense; explicit salting (operators/skew.py) is the second.
-    - Arrow on: the grok parser is a vectorized pandas UDF (no per-row
-      Python, per the north rule).
+    - Arrow on: the grok parser's arrow engine is an ``arrow_udf`` (no
+      per-row Python, per the north rule).
     - UTC session timezone: keeps timestamp rendering identical between
       Spark and the DuckDB oracle over the same parquet files.
     """

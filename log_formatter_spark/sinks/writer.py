@@ -8,10 +8,10 @@ The Spark rendering:
 - **Batch**: one single-pass ``partitionBy(route)`` write. The route
   column becomes the partition directory — one scan, no per-sink jobs,
   and downstream readers get partition pruning on the route for free.
-- **Streaming**: per-sink filtered writes inside ``foreachBatch``
-  (streaming/job.py) — Spark's standard multi-sink idiom, micro-batch ≡
-  the reference's size/time-bounded bulk buffer
-  (elasticsearch.go:103-131).
+- **Streaming**: the same single ``partitionBy(route)`` write, once per
+  micro-batch inside ``foreachBatch`` (streaming/job.py), under
+  ``batch_id=<id>/`` — micro-batch ≡ the reference's size/time-bounded
+  bulk buffer (elasticsearch.go:103-131).
 
 A name→writer registry mirrors the reference's output factory registry
 (agent/output/output.go:23-38); Python callables replace `.so` plugins

@@ -24,7 +24,7 @@ from __future__ import annotations
 
 import os
 
-from pyspark.sql import DataFrame, SparkSession
+from pyspark.sql import DataFrame, Observation, SparkSession
 from pyspark.sql import functions as F
 from pyspark.sql.types import (
     IntegerType,
@@ -36,7 +36,7 @@ from pyspark.sql.types import (
 
 from log_formatter_spark.operators.aggregate import sink_aggregates
 from log_formatter_spark.operators.parser import PARSE_OK
-from log_formatter_spark.operators.route import ROUTE
+from log_formatter_spark.operators.route import DEFAULT_ROUTES, ROUTE
 from log_formatter_spark.pipeline import PipelineOptions, parsed_enriched_routed
 from log_formatter_spark.streaming.ledger import MetricsLedger
 
@@ -118,8 +118,6 @@ def run_streaming_pipeline(
     ``out/routed/batch_id=*/route=*/`` (partition-pruned reads via
     read_routed_stream_output).
     """
-    from log_formatter_spark.operators.route import DEFAULT_ROUTES
-
     ledger = MetricsLedger(
         spark, DEFAULT_ROUTES, os.path.join(out_dir, "ledger")
     )
@@ -128,9 +126,18 @@ def run_streaming_pipeline(
     def write_batch(batch_df: DataFrame, batch_id: int) -> None:
         routed = parsed_enriched_routed(spark, batch_df, opts).persist()
         try:
-            # 1. multi-sink fan-out: ONE partitioned write, per-sink dirs
+            # 1. multi-sink fan-out: ONE partitioned write, per-sink dirs;
+            # the ledger counts ride on it. The Observation sits above the
+            # cached frame, so the agg write's cache read cannot fire it.
+            obs = Observation()
             (
-                routed.write.mode("overwrite")
+                routed.observe(
+                    obs,
+                    F.count(F.lit(1)).alias("rows_in"),
+                    F.count_if(F.col(PARSE_OK)).alias("rows_parsed"),
+                    *[F.count_if(F.col(ROUTE) == r).alias(f"routed_{r}") for r in DEFAULT_ROUTES],
+                )
+                .write.mode("overwrite")
                 .partitionBy(ROUTE)
                 .parquet(os.path.join(_routed_dir(out_dir), f"batch_id={batch_id}"))
             )
@@ -141,26 +148,9 @@ def run_streaming_pipeline(
                 .write.mode("overwrite")
                 .parquet(os.path.join(_agg_dir(out_dir), f"batch_id={batch_id}"))
             )
-            # 3. metrics: one grouped count pass over the cached batch
-            route_counts = {
-                f"routed_{r[ROUTE]}": r["n"]
-                for r in routed.groupBy(ROUTE).agg(F.count(F.lit(1)).alias("n")).collect()
-            }
-            ok = sum(
-                r["n"]
-                for r in routed.groupBy(PARSE_OK).agg(F.count(F.lit(1)).alias("n")).collect()
-                if r[PARSE_OK]
-            )
-            total = sum(route_counts.values())
-            ledger.record_batch(
-                batch_id,
-                {
-                    "rows_in": total,
-                    "rows_parsed": ok,
-                    "rows_discarded": total - ok,
-                    **route_counts,
-                },
-            )
+            counts = obs.get
+            counts["rows_discarded"] = counts["rows_in"] - counts["rows_parsed"]
+            ledger.record_batch(batch_id, counts)
         finally:
             routed.unpersist()
 

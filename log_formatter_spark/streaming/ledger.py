@@ -8,7 +8,7 @@ heartbeats (agent/manager.go:166-208) with:
 - SparkContext accumulators holding cumulative pipeline counters
   (rows_in / rows_parsed / rows_discarded / routed_<sink>), and
 - a per-batch ledger table: one parquet dir per micro-batch
-  (``_ledger/batch_id=<id>/``), overwritten on replay so resume never
+  (``ledger/batch_id=<id>/``), overwritten on replay so resume never
   double-counts — the per-partition lineage record the north rule asks
   for.
 """
@@ -19,6 +19,10 @@ import os
 
 from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
+
+# one ledger row on disk; the cast names the literal struct's fields and
+# keeps them nullable, so every batch partition has the same parquet schema
+_LEDGER_ROW = "struct<metric: string, batch_value: bigint, cumulative: bigint>"
 
 
 class MetricsLedger:
@@ -76,20 +80,12 @@ class MetricsLedger:
                 self.acc[name] = self.spark.sparkContext.accumulator(0)
             self.acc[name].add(int(v))
         rows = [
-            (name, int(counts.get(name, 0)), int(self.acc[name].value))
+            F.struct(
+                F.lit(name), F.lit(int(counts.get(name, 0))), F.lit(int(self.acc[name].value))
+            ).cast(_LEDGER_ROW)
             for name in sorted(self.acc)
         ]
-        # ONE explicit slice, not createDataFrame + coalesce(1):
-        # createDataFrame parallelizes driver rows across default
-        # parallelism (32 mostly-empty partitions), and a coalesce(1)
-        # task then round-trips a Python worker per parent partition
-        # SEQUENTIALLY — measured ~6 s per ledger write (32 × ~0.2 s)
-        # vs ~0.4 s for a single-slice parallelize. This was the real
-        # cost behind the streaming contract query's 20 s gate time.
-        df = self.spark.createDataFrame(
-            self.spark.sparkContext.parallelize(rows, 1),
-            "metric string, batch_value long, cumulative long",
-        )
+        df = self.spark.range(1, numPartitions=1).select(F.inline(F.array(*rows)))
         path = os.path.join(self.ledger_dir, f"batch_id={batch_id}")
         df.write.mode("overwrite").parquet(path)
 

@@ -3,7 +3,10 @@
 catalog queries, formatted, with scan/exchange/join summaries — the
 evidence that each operator compiles to the plan its docstring claims.
 
-Usage: PYTHONPATH=/root/repo python scripts/dump_plans.py [sf_dir]
+Each query runs to the ``noop`` sink first, so the plan shown is the
+AQE-final one that actually ran, not the plan before execution.
+
+Usage, from the repository root: PYTHONPATH=. python scripts/dump_plans.py [sf_dir]
 """
 
 from __future__ import annotations
@@ -83,6 +86,29 @@ SHOWCASE = [
 ]
 
 
+def final_plan(spark, df) -> str:
+    """Run ``df`` to the noop sink and return that run's executed plan,
+    read from the status store, without AQE's ``== Initial Plan ==``
+    subtrees (the write's own query execution is the one that ran)."""
+    df.write.format("noop").mode("overwrite").save()
+    spark.sparkContext._jsc.sc().listenerBus().waitUntilEmpty()
+    store = spark._jsparkSession.sharedState().statusStore()
+    desc = str(store.executionsList(store.executionsCount() - 1, 1).apply(0).physicalPlanDescription())
+    if "NoopWrite" not in desc:
+        raise RuntimeError(f"the last execution is not the noop write:\n{desc}")
+    lines, cut = [], None
+    for line in desc.split("== Physical Plan ==\n", 1)[1].splitlines():
+        depth = len(line) - len(line.lstrip(" :"))
+        if cut is not None and depth > cut:
+            continue
+        cut = None
+        if "== Initial Plan ==" in line:
+            cut = depth
+            continue
+        lines.append(line)
+    return "\n".join(lines)
+
+
 def summarize(plan: str) -> str:
     counts = {
         "hash exchanges": plan.count("Exchange hashpartitioning"),
@@ -99,20 +125,22 @@ def main() -> None:
     sf_dir = sys.argv[1] if len(sys.argv) > 1 else "/root/testdata/sf0.01"
     spark = get_spark("dump-plans", cores=8)
     spark.sparkContext.setLogLevel("ERROR")
+    # the status store keeps the extended (tree) plan text, as toString()
+    spark.conf.set("spark.sql.ui.explainMode", "extended")
     qs = contract.queries()
     out = [
         "# PLANS — executed physical plans of representative queries",
         "",
-        f"Generated by `scripts/dump_plans.py` over `{sf_dir}`. Each plan is",
-        "the AQE-final executed plan; the one-line summary counts the nodes",
-        "that matter at 100 TB (exchanges, join strategies, python evals).",
+        f"Generated by `scripts/dump_plans.py` over `{sf_dir}`. Each query ran",
+        "to the `noop` sink; its plan is the AQE-final executed plan of that",
+        "run (initial-plan subtrees dropped). The one-line summary counts the",
+        "nodes that matter at 100 TB (exchanges, join strategies, python evals).",
         "Plan-shape regression tests pin the load-bearing properties",
         "(tests/test_plans.py, tests/test_catalog_plans.py).",
         "",
     ]
     for name, blurb in SHOWCASE:
-        df = qs[name](spark, sf_dir)
-        plan = df._jdf.queryExecution().executedPlan().toString()
+        plan = final_plan(spark, qs[name](spark, sf_dir))
         # compress: drop output column lists and long literal arrays
         lines = []
         for line in plan.splitlines():

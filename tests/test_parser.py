@@ -3,10 +3,13 @@
 Covers the rules from reference agent/pipeline/parser/parser.go +
 util/regexp.go: search semantics, `_`-group discard, non-participating
 group -> "", no-match -> discard (parse_ok=false), error_tolerant,
-two-level labels, and arrow/jvm engine agreement.
+two-level labels, arrow/jvm engine agreement, and refusal of non-RE2
+patterns.
 """
 
 from __future__ import annotations
+
+import re
 
 import pytest
 from pyspark.sql import Row
@@ -116,3 +119,15 @@ def test_engines_agree(spark):
     a = apply_parser(_df(spark, texts), ParserConfig(PAT, engine="arrow"))
     j = apply_parser(_df(spark, texts), ParserConfig(PAT, engine="jvm"))
     assert sorted(map(str, a.collect())) == sorted(map(str, j.collect()))
+
+
+@pytest.mark.parametrize("engine", ["arrow", "jvm"])
+@pytest.mark.parametrize(
+    "pattern",
+    [r"(?P<word>\w+)(?=!)", r"(?P<ch>\w)\1"],
+    ids=["lookahead", "backreference"],
+)
+def test_non_re2_pattern_rejected(spark, engine, pattern):
+    # Go's regexp (RE2) has neither; both engines refuse up front
+    with pytest.raises(ValueError, match=re.escape(repr(pattern))):
+        apply_parser(_df(spark, [GOOD]), ParserConfig(pattern, engine=engine))

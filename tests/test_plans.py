@@ -13,7 +13,7 @@ from pyspark.sql import functions as F
 
 from log_formatter_spark.functions.text import text_stats
 from log_formatter_spark.operators.similarity import brute_topk
-from log_formatter_spark.pipeline import PipelineOptions, full_pipeline
+from log_formatter_spark.pipeline import PipelineOptions, full_pipeline, parsed_enriched_routed
 from log_formatter_spark.transcripts import transcripts_from_events
 
 
@@ -86,6 +86,24 @@ def test_parse_stays_whole_stage_codegen(spark, sf_dir):
     assert "*(" in plan and "RLIKE" in plan
     assert "ArrowEvalPython" not in plan  # no python in the jvm path
     assert "BatchEvalPython" not in plan  # and no row-at-a-time python
+
+
+def test_jvm_flagship_runs_no_python(spark, sf_dir):
+    # jvm parse engine + literal lookups: the row-level DAG never leaves
+    # the JVM — no Python UDF, no Python-built RDD, and both broadcast
+    # builds read an in-plan literal
+    df = parsed_enriched_routed(
+        spark, transcripts_from_events(spark, sf_dir), PipelineOptions(engine="jvm")
+    )
+    df.collect()  # finalize this QueryExecution's AQE plan
+    plan = _plan(df)
+    assert "isFinalPlan=true" in plan
+    for node in ("ExistingRDD", "ArrowEvalPython", "BatchEvalPython"):
+        assert node not in plan, plan
+    final = plan.split("== Initial Plan ==")[0].splitlines()
+    builds = [final[i + 1] for i, line in enumerate(final) if "BroadcastExchange" in line]
+    assert len(builds) == 2, plan
+    assert all("+- LocalTableScan" in b for b in builds), plan
 
 
 def test_arrow_parse_is_single_python_eval(spark, sf_dir):

@@ -11,6 +11,7 @@ from __future__ import annotations
 
 from pyspark.sql import functions as F
 
+from log_formatter_spark.operators.route import DEFAULT_ROUTES
 from log_formatter_spark.pipeline import full_pipeline, parsed_enriched_routed
 from log_formatter_spark.streaming import (
     read_final_aggregates,
@@ -56,7 +57,7 @@ def test_streaming_equals_batch_and_resumes(spark, sf_dir, tmp_path):
     from log_formatter_spark.pipeline import PipelineOptions
 
     second.repartition(1).write.mode("append").parquet(src)
-    run_streaming_pipeline(
+    ledger = run_streaming_pipeline(
         spark, src, out, ckpt,
         opts=PipelineOptions(engine="jvm"),
         max_files_per_trigger=1,
@@ -83,13 +84,26 @@ def test_streaming_equals_batch_and_resumes(spark, sf_dir, tmp_path):
     led = read_ledger(spark, out + "/ledger")
     n_batches_2 = led.select("batch_id").distinct().count()
     assert n_batches_2 == n_batches_1 + 1
-    # cumulative rows_in in the ledger's last batch equals total
-    last = (
-        led.where(F.col("metric") == "rows_in")
-        .orderBy(F.col("batch_id").desc())
-        .first()
-    )
-    assert last["cumulative"] == t.count()
+    # every cumulative in the ledger's last batch equals the batch
+    # pipeline's count over everything
+    n_ok = want.where(F.col("parse_ok")).count()
+    per_route = {
+        r["route"]: r["n"]
+        for r in want.groupBy("route").agg(F.count(F.lit(1)).alias("n")).collect()
+    }
+    expected = {
+        "rows_in": t.count(),
+        "rows_parsed": n_ok,
+        "rows_discarded": t.count() - n_ok,
+        **{f"routed_{r}": per_route.get(r, 0) for r in DEFAULT_ROUTES},
+    }
+    last_id = led.agg(F.max("batch_id")).first()[0]
+    last = {
+        r["metric"]: r["cumulative"]
+        for r in led.where(F.col("batch_id") == last_id).collect()
+    }
+    assert last == expected
+    assert ledger.snapshot() == expected
 
 
 def test_ledger_replay_does_not_double_count(spark, sf_dir, tmp_path):
@@ -97,7 +111,6 @@ def test_ledger_replay_does_not_double_count(spark, sf_dir, tmp_path):
     written but the streaming checkpoint never committed, so batch N is
     replayed after restart. The recovered cumulatives already include
     N; the replayed record_batch must retract before re-adding."""
-    from log_formatter_spark.operators.route import DEFAULT_ROUTES
     from log_formatter_spark.streaming.ledger import MetricsLedger
 
     src = str(tmp_path / "in")
